@@ -20,8 +20,8 @@ _SF0001 = "/root/testdata/sf0.001"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # One loader everywhere: schema validation + nanos->ntz normalization
-    # live in sources/catalog.py; io.load_table delegates there.
+    # One loader everywhere: the declared-schema read and its footer column
+    # check live in sources/catalog.py; io.load_table delegates there.
     return load_table(spark, sf_dir, name)
 
 

@@ -2,16 +2,21 @@
 print ONE JSON line the driver parses.
 
     {"metric": "total_query_wall_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": 0.1}
+     "queries": {name: sec, ...},
+     "query_reps": {name: {"reps": [sec, ...], "max": sec, "n": k}, ...},
+     "sf": 0.1}
 
 Methodology (r21): each query is timed REPS (3) times and the per-query
-MEDIAN is reported; the total is the sum of medians. The single-run harness
-used through r20 measured sandbox weather as much as plan cost (totals of
-6.27x / 1.24x / 1.04x / 2.16x baseline on byte-identical code, r17-r20) —
-medians make the number a property of the plan again. Every repetition
-computes from the parquet inputs: the dedup module's intra-query cache is
-dropped before EACH repetition, so no repetition is advantaged by work a
-previous one did (see OPTIMIZATION_r21.md "Bench methodology").
+MEDIAN is reported; the total is the sum of medians. ``query_reps`` keeps
+each median's repetitions, their max and their count beside it, so a
+median that a stalled host pushed up shows in the JSON line itself. The
+single-run harness used through r20 measured sandbox weather as much as
+plan cost (totals of 6.27x / 1.24x / 1.04x / 2.16x baseline on
+byte-identical code, r17-r20) — medians make the number a property of the
+plan again. Every repetition computes from the parquet inputs: the dedup
+module's intra-query cache is dropped before EACH repetition, so no
+repetition is advantaged by work a previous one did (see
+OPTIMIZATION_r21.md "Bench methodology").
 
 The timed action stays the noop sink (spark_optimization_guide.md §1.4):
 it evaluates every output column JVM-side without shipping rows anywhere.
@@ -82,6 +87,7 @@ def main() -> int:
     force(mod.q_revenue_by_flag(spark, sf_dir))
 
     timings: dict[str, float] = {}
+    query_reps: dict[str, dict] = {}
     for name, fn in mod.queries().items():
         reps: list[float] = []
         for rep in range(REPS):
@@ -99,13 +105,19 @@ def main() -> int:
                 spark.sparkContext.setJobDescription(None)
         if reps:
             timings[name] = round(statistics.median(reps), 3)
+            query_reps[name] = {
+                "reps": [round(r, 3) for r in reps],
+                "max": round(max(reps), 3),
+                "n": len(reps),
+            }
             print(
-                f"bench {name}: reps={[round(r, 3) for r in reps]} "
+                f"bench {name}: reps={query_reps[name]['reps']} "
                 f"median={timings[name]}",
                 file=sys.stderr,
             )
         else:
             timings[name] = -1.0
+            query_reps[name] = {"reps": [], "max": -1.0, "n": 0}
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf_label = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -120,6 +132,7 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "query_reps": query_reps,
                 "sf": sf,
             }
         )

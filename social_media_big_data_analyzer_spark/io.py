@@ -1,55 +1,15 @@
-"""Table loading for the driver-generated parquet fixtures.
+"""Import path of the table loader for the query modules.
 
-All queries read through :func:`load_table` so schema quirks are handled in
-exactly one place. The only quirk today: ``events.ts`` is written as
-parquet INT64 nanoseconds; with ``spark.sql.legacy.parquet.nanosAsLong``
-Spark surfaces it as ``bigint``, which we convert (floor-division, exact
-for negatives) to ``timestamp_ntz`` so downstream window/date logic is
-written against a real timestamp. DuckDB reads the same file natively as
-``timestamp_ns`` — keeping both engines on identical wall-clock values.
-
-At 100 TB the conversion is a per-row projection fused into the scan by
-whole-stage codegen — no shuffle, no materialization.
+The loader is :func:`.sources.catalog.load_table`. It is looked up at call
+time, so replacing that module attribute reaches every query path.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_NANOS_TO_NTZ = (
-    "timestampadd(MICROSECOND, CASE WHEN {c} >= 0 THEN {c} DIV 1000 "
-    "ELSE -((-{c} + 999) DIV 1000) END, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-)
-
-
-def configure(spark: SparkSession) -> SparkSession:
-    """Session settings every query relies on; safe to call repeatedly."""
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - immutable conf in some harnesses
-            pass
-    return spark
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table, normalizing nanosecond-int64 timestamps.
+    from .sources import catalog
 
-    Delegates to :func:`..sources.catalog.load_table` — the single loader
-    with the fail-loudly schema contract — so every query path gets
-    schema validation, not just the catalog path.
-    """
-    from .sources.catalog import load_table as _catalog_load
-
-    configure(spark)
-    return _catalog_load(spark, sf_dir, name)
+    return catalog.load_table(spark, sf_dir, name)

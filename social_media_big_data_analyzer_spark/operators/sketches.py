@@ -2,8 +2,9 @@
 signatures, SimHash bit signatures (SURVEY §2.2 C23; LLM-pipeline dedup
 mandate).
 
-Everything is a Column-expression builder — signatures are computed inside
-whole-stage codegen from ``xxhash64`` of shingles, no Python in the path.
+The Column-expression builders compute signatures from ``xxhash64`` of
+shingles; ``minhash_batches`` and ``simhash_batches`` are their bit-exact
+numpy twins for ``mapInArrow``, which the dedup queries run.
 
 100 TB shape: a signature is O(k) longs per document regardless of
 document size, so dedup shuffles signatures (bytes) instead of documents
@@ -21,16 +22,6 @@ from pyspark.sql import functions as F
 SHINGLE_K = 5
 MINHASH_PERMS = 16
 MINHASH_BANDS = 8  # r = 2 rows per band
-
-def word_shingles(text: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct k-word shingles of a space-separated text column."""
-    t = F.split(F.lower(text), " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(t, i, k)),
-        )
-    )
 
 
 def hashed_word_shingles(tokens: Column, k: int = SHINGLE_K) -> Column:
@@ -55,11 +46,6 @@ def hashed_word_shingles(tokens: Column, k: int = SHINGLE_K) -> Column:
             lambda i: F.xxhash64(*[F.element_at(tokens, i + j) for j in range(k)]),
         )
     )
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """xxhash64 of each shingle — the universe MinHash permutes over."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
 def _perm(i: int):
@@ -95,12 +81,13 @@ _XXH_P5 = 0x27D4EB2F165667C5
 def _xxh64_fmix(h):
     import numpy as np
 
-    h ^= h >> np.uint64(33)
-    h *= np.uint64(_XXH_P2)
-    h ^= h >> np.uint64(29)
-    h *= np.uint64(_XXH_P3)
-    h ^= h >> np.uint64(32)
-    return h
+    with np.errstate(over="ignore"):  # uint64 wrap-around is the algorithm
+        h ^= h >> np.uint64(33)
+        h *= np.uint64(_XXH_P2)
+        h ^= h >> np.uint64(29)
+        h *= np.uint64(_XXH_P3)
+        h ^= h >> np.uint64(32)
+        return h
 
 
 def _xxh64_long(inp_u64, seed_u64):
@@ -108,13 +95,14 @@ def _xxh64_long(inp_u64, seed_u64):
     import numpy as np
 
     r31, r27 = np.uint64(31), np.uint64(27)
-    h = seed_u64 + np.uint64(_XXH_P5) + np.uint64(8)
-    k1 = inp_u64 * np.uint64(_XXH_P2)
-    k1 = (k1 << r31) | (k1 >> np.uint64(33))
-    k1 *= np.uint64(_XXH_P1)
-    h = h ^ k1
-    h = ((h << r27) | (h >> np.uint64(37))) * np.uint64(_XXH_P1) + np.uint64(_XXH_P4)
-    return _xxh64_fmix(h)
+    with np.errstate(over="ignore"):  # uint64 wrap-around is the algorithm
+        h = seed_u64 + np.uint64(_XXH_P5) + np.uint64(8)
+        k1 = inp_u64 * np.uint64(_XXH_P2)
+        k1 = (k1 << r31) | (k1 >> np.uint64(33))
+        k1 *= np.uint64(_XXH_P1)
+        h = h ^ k1
+        h = ((h << r27) | (h >> np.uint64(37))) * np.uint64(_XXH_P1) + np.uint64(_XXH_P4)
+        return _xxh64_fmix(h)
 
 
 def _xxh64_int(i: int, seed: int):
@@ -165,10 +153,9 @@ def minhash_batches(it):
         starts = np.zeros(n_docs, dtype=np.int64)
         np.cumsum(lengths[:-1], out=starts[1:])
         mins = np.empty((n_docs, MINHASH_PERMS), dtype=np.int64)
-        with np.errstate(over="ignore"):
-            for i in range(MINHASH_PERMS):
-                h = _xxh64_long(u, seeds[i]).view(np.int64)
-                mins[:, i] = np.minimum.reduceat(h, starts) if n_docs else h[:0]
+        for i in range(MINHASH_PERMS):
+            h = _xxh64_long(u, seeds[i]).view(np.int64)
+            mins[:, i] = np.minimum.reduceat(h, starts) if n_docs else h[:0]
         offsets = pa.array(
             np.arange(0, (n_docs + 1) * MINHASH_PERMS, MINHASH_PERMS, dtype=np.int32)
         )
@@ -255,24 +242,22 @@ def simhash_batches(it):
         lengths = lists.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
         values = lists.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
         n_docs = len(lengths)
-        if len(values) == 0:
-            sig = np.zeros(n_docs, dtype=np.int64)
-        else:
-            bits = np.unpackbits(
-                values.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-            ).astype(np.int64)
-            starts = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(lengths[:-1], out=starts[1:])
-            counts = np.add.reduceat(bits, starts, axis=0)
-            # reduceat misreads empty segments (repeated starts); the
-            # shingle table guarantees n >= 1, but zero them defensively
-            # (aggregate over an empty array votes all-zero -> sig 0).
-            sig_bits = (2 * counts) > lengths[:, None]
-            sig_bits[lengths == 0] = False
-            packed = np.zeros(n_docs, dtype=np.uint64)
-            for b in range(64):
-                packed |= sig_bits[:, b].astype(np.uint64) << np.uint64(b)
-            sig = packed.view(np.int64)
+        if (lengths == 0).any():
+            # the shingle table guarantees >= 1 shingle per doc; reduceat
+            # cannot sum an empty segment (it reads the next doc's first
+            # row, or raises IndexError at the end) — fail loudly instead
+            raise ValueError("simhash_batches: empty hash set")
+        bits = np.unpackbits(
+            values.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+        ).astype(np.int64)
+        starts = np.zeros(n_docs, dtype=np.int64)
+        np.cumsum(lengths[:-1], out=starts[1:])
+        counts = np.add.reduceat(bits, starts, axis=0)
+        sig_bits = (2 * counts) > lengths[:, None]
+        packed = np.zeros(n_docs, dtype=np.uint64)
+        for b in range(64):
+            packed |= sig_bits[:, b].astype(np.uint64) << np.uint64(b)
+        sig = packed.view(np.int64)
         yield pa.RecordBatch.from_arrays(
             [doc_ids, pa.array(sig, type=pa.int64())], ["doc_id", "sig"]
         )

@@ -4,8 +4,9 @@ The reference infers every schema dynamically (pandas at
 /root/reference/app.py:150); this engine declares them (FIXTURES.md §B,
 verified against /root/testdata/sf0.001 parquet footers).
 
-`EVENTS` is the post-scan schema: the parquet file stores
-TIMESTAMP(NANOS) which we surface as timestamp_ntz (sources/catalog.py).
+Every table is read with these schemas (sources/catalog.py); no load
+infers one. `events.ts` is parquet TIMESTAMP(MICROS) without a zone,
+read as timestamp_ntz.
 """
 
 from __future__ import annotations
@@ -88,18 +89,6 @@ EVENTS = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
         T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-#: Raw on-disk schema of events (TIMESTAMP(NANOS) read as long nanos).
-EVENTS_RAW = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),

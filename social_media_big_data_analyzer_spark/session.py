@@ -1,4 +1,4 @@
-"""SparkSession factory and runtime configuration.
+"""Runtime configuration of the engine's SparkSession.
 
 Reference analog: process boot at /root/reference/app.py:13-34 (cached
 NLTK init, page config, session-state init). Here the long-lived
@@ -11,9 +11,6 @@ Scale notes (100 TB):
 - Arrow on: every pandas UDF / toPandas crosses the JVM<->Python boundary
   in columnar batches.
 - UTC session timezone: deterministic timestamp semantics (oracle parity).
-- `nanosAsLong`: the events table stores TIMESTAMP(NANOS) which the
-  vectorized parquet reader rejects; we read nanos as long and convert
-  at the scan (sources/catalog.py) -- still a single pushed-down scan.
 """
 
 from __future__ import annotations
@@ -41,15 +38,10 @@ RUNTIME_CONFS: dict[str, str] = {
         "SMBDA_ADVISORY_PARTITION_BYTES", "64m"
     ),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Small dims (region/nation/supplier/part at test SFs) must broadcast.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.parquet.filterPushdown": "true",
 }
-
-
-def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def configure(spark: SparkSession) -> SparkSession:
@@ -60,37 +52,3 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build, or restricted -- keep going
     return spark
-
-
-def build_spark(
-    app_name: str = "smbda-spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Create (or fetch) the engine's SparkSession.
-
-    local[N] for tests/bench; on a real cluster the master/executor confs
-    come from spark-submit and only the SQL confs here matter.
-    """
-    n = cpus or default_cpus()
-    parts = shuffle_partitions or max(2 * n, 8)
-    builder = SparkSession.builder
-    # Respect a cluster master supplied via spark-submit / env; only fall
-    # back to local[N] when nothing external chose one.
-    external_master = os.environ.get("SPARK_MASTER") or (
-        "--master" in os.environ.get("PYSPARK_SUBMIT_ARGS", "")
-    )
-    if not external_master:
-        builder = builder.master(f"local[{n}]")
-    builder = (
-        builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.driver.memory", os.environ.get("SMBDA_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return configure(spark)

@@ -5,67 +5,35 @@ Reference analog: the paginated API source at /root/reference/app.py:82-150
 filters and prunes columns into the scan (the reference hand-compiled its
 predicates into the API query string, app.py:89; here that's free).
 
-Scale: a scan stays one job regardless of table size; events' nanos->ntz
-conversion is a per-row projection fused into the scan stage (no shuffle).
+Every table is read with its declared schema (``schemas.SCHEMAS``), so a
+load starts no schema-inference job. A declared-schema read turns a
+missing column into NULLs, so the column names in the parquet footer are
+checked against the declaration instead (:func:`check_columns`).
+
+Scale: a scan stays one job regardless of table size, and the footer check
+reads metadata only -- no Spark job, no data pages.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+from .. import schemas
 
 
-def _ensure_nanos_conf(spark: SparkSession) -> None:
-    # Both confs matter for deterministic events.ts values: nanosAsLong so
-    # the vectorized reader accepts TIMESTAMP(NANOS), and UTC so nothing
-    # downstream routes through a session-local zone.
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-
-
-#: Single source of truth for the nanos->ntz conversion lives in io.py;
-#: imported here (not duplicated) so the batch and streaming readers can
-#: never drift.
-from ..io import _NANOS_TO_NTZ  # noqa: E402
-
-
-def _validate_schema(name: str, df: DataFrame) -> None:
-    """Fail loudly on column-name drift; tolerate ts-flavor differences.
+def check_columns(name: str, path: str) -> None:
+    """Fail loudly on column-name drift between the parquet footer at
+    ``path`` (one file or a Spark-written directory) and the declared schema.
 
     The explicit StructTypes in schemas.py are the contract; parquet
     footers are untrusted input at 100 TB (one bad file must not silently
     change query semantics).
     """
-    from .. import schemas
-
-    expected = schemas.SCHEMAS.get(name)
-    if expected is None:
-        return
-    got = [f.name for f in df.schema.fields]
-    want = [f.name for f in expected.fields]
+    got = pads.dataset(path, format="parquet").schema.names
+    want = schemas.SCHEMAS[name].names
     if got != want:
         raise ValueError(
             f"schema drift in table {name!r}: columns {got} != declared {want}"
@@ -73,13 +41,17 @@ def _validate_schema(name: str, df: DataFrame) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table; normalizes events.ts (nanos long -> ntz)."""
-    _ensure_nanos_conf(spark)
+    """Read one table with its declared schema.
+
+    The Spark read runs first so a missing path raises ``AnalysisException``
+    (:func:`load_table_or_empty` relies on it); the footer check runs second.
+    """
+    # UTC keeps timestamp semantics identical to the DuckDB oracle, also on
+    # a session handed in by an external driver.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
-        df = df.withColumn("ts", F.expr(_NANOS_TO_NTZ.format(c="ts")))
-    _validate_schema(name, df)
+    df = spark.read.schema(schemas.SCHEMAS[name]).parquet(path)
+    check_columns(name, path)
     return df
 
 
@@ -89,29 +61,12 @@ def load_table_or_empty(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     failures to an empty frame plus a user-visible error).
 
     Only *missing-source* failures degrade to empty; schema drift
-    (`ValueError` from :func:`_validate_schema`) still raises, because a
+    (`ValueError` from :func:`check_columns`) still raises, because a
     readable-but-wrong table is corruption, not absence.
     """
     from pyspark.errors import AnalysisException
 
-    from .. import schemas
-
     try:
         return load_table(spark, sf_dir, name)
     except AnalysisException:
-        expected = schemas.SCHEMAS.get(name)
-        if expected is None:
-            raise
-        return spark.createDataFrame([], schema=expected)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register temp views so queries can run via spark.sql(...)."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        return spark.createDataFrame([], schema=schemas.SCHEMAS[name])

@@ -8,10 +8,13 @@ the streaming result equals the batch SQL result — which is what lets the
 driver hash-match a streaming query against a DuckDB oracle.
 
 100 TB notes: the same pipelines run unbounded by swapping the trigger
-for ``processingTime`` and the memory sink for kafka/delta. State stays
-bounded: the tumbling agg keeps one row per (window, key) until the
-watermark closes the window; dropDuplicates state is capped by the
-watermark horizon. The reference's ingest loop (app.py:100-136 — page cap,
+for ``processingTime`` and the memory sink for kafka/delta. The tumbling
+agg's state stays bounded: one row per (window, key) until the watermark
+closes the window. The dropDuplicates state is NOT bounded by
+the watermark: event time is not one of its keys (``user_id``,
+``event_type``), so it keeps one row per distinct key for the life of the
+query -- O(distinct keys), which an exact all-time distinct count needs
+anyway. The reference's ingest loop (app.py:100-136 — page cap,
 1.2 s sleep, word-count stop) maps to maxFilesPerTrigger (pagination),
 trigger interval (rate limit), and a foreachBatch stop condition
 (tests/test_streaming.py exercises it).
@@ -25,30 +28,25 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from .. import schemas
+from ..sources.catalog import check_columns
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the batch-derived schema
-    and the same nanos->timestamp normalization as the batch loader."""
-    batch = load_table(spark, sf_dir, "events")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    """readStream over the events parquet with the declared schema and the
+    batch loader's footer column check."""
+    # Watermarks require TIMESTAMP (not NTZ); the session timezone is
+    # pinned to UTC so the cast below preserves wall-clock values exactly.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The file source wants a directory; the fixture is a single file, so
     # stream the directory with a glob filter.
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(schemas.EVENTS)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if dict(stream.dtypes).get("ts") in ("bigint", "long"):
-        from ..io import _NANOS_TO_NTZ
-
-        stream = stream.withColumn("ts", F.expr(_NANOS_TO_NTZ.format(c="ts")))
-    # Watermarks require TIMESTAMP (not NTZ); the session timezone is
-    # pinned to UTC so the cast preserves wall-clock values exactly.
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    # keep analyzer-identical column order with the batch loader
-    return stream.select(batch.columns)
+    check_columns("events", os.path.join(sf_dir, "events.parquet"))
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 # Streaming state partition count, pinned at query start (Spark fixes it

@@ -37,10 +37,10 @@ def entry_mod():
 def duck():
     import duckdb
 
+    from social_media_big_data_analyzer_spark.schemas import SCHEMAS
+
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in SCHEMAS:
         p = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

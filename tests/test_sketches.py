@@ -124,3 +124,36 @@ def test_approx_distinct_within_tolerance(spark, entry_mod, duck):
     for k, est in approx.items():
         rel_err = abs(est - exact[k]) / max(exact[k], 1)
         assert rel_err <= 0.1, f"{k}: approx {est} vs exact {exact[k]}"
+
+
+def test_simhash_arrow_rejects_empty_hash_set():
+    """A trailing empty hash list has no segment for ``reduceat``; the
+    kernel must name the fault like ``minhash_batches`` does."""
+    import pyarrow as pa
+    import pytest
+
+    from social_media_big_data_analyzer_spark.operators.sketches import simhash_batches
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, 2], type=pa.int64()),
+            pa.array([[11, 12, 13], []], type=pa.list_(pa.int64())),
+        ],
+        ["doc_id", "hashes"],
+    )
+    with pytest.raises(ValueError, match="empty hash set"):
+        list(simhash_batches(iter([batch])))
+
+
+def test_xxh64_long_wraps_without_overflow_error(spark):
+    """uint64 wrap-around is the algorithm, so the kernel must not depend on
+    its caller's numpy error state; the value must equal Spark's
+    ``xxhash64`` of the long."""
+    import numpy as np
+
+    from social_media_big_data_analyzer_spark.operators.sketches import _xxh64_long
+
+    with np.errstate(over="raise"):
+        got = _xxh64_long(np.uint64(2**63 + 12345), np.uint64(42)).view(np.int64)
+    want = spark.sql("SELECT xxhash64(CAST(-9223372036854763463 AS BIGINT)) AS h").first().h
+    assert int(got) == want

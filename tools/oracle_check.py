@@ -15,10 +15,6 @@ import sys
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def _norm(v):
     if v is None:
@@ -49,6 +45,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from social_media_big_data_analyzer_spark.schemas import SCHEMAS
+
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -60,7 +58,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SCHEMAS:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

@@ -24,7 +24,6 @@ it evaluates every output column JVM-side without shipping rows anywhere.
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import statistics
@@ -37,34 +36,11 @@ REPS = 3
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    repo = os.path.dirname(os.path.abspath(__file__))
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    from pyspark.sql import SparkSession
-
+    import __spark_entry__ as mod
     import social_media_big_data_analyzer_spark as engine
-    from social_media_big_data_analyzer_spark import session as engine_session
-    from social_media_big_data_analyzer_spark.queries import REGISTRY as _reg  # noqa: F401  (registers cache clearers)
+    from social_media_big_data_analyzer_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "100g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # The engine's runtime-settable confs (AQE partition coalescing by
-    # bytes, broadcast threshold, Arrow) -- the same ones every production
-    # session of this engine runs with; see session.RUNTIME_CONFS.
-    engine_session.configure(spark)
+    spark = local_session(cpus, driver_memory="100g")
 
     def force(df):
         # count() lets Catalyst prune every projected column, so pure
@@ -72,15 +48,6 @@ def main() -> int:
         # noop sink evaluates all output columns JVM-side without shipping
         # rows to the driver.
         df.write.format("noop").mode("overwrite").save()
-
-    def drop_intra_query_caches() -> None:
-        # Query modules that memoize DataFrames register a clearer with
-        # the engine package (r22: public hook instead of reaching into
-        # dedup._CACHE — a module adding a new memo is covered
-        # automatically). Clearing before every repetition makes each
-        # timing a full computation from parquet -- repetition 1 is not
-        # advantaged and no query inherits another's warm cache.
-        engine.clear_caches()
 
     # Warm the JVM/codegen paths so per-query timings measure the plan,
     # not first-run classloading.
@@ -91,7 +58,9 @@ def main() -> int:
     for name, fn in mod.queries().items():
         reps: list[float] = []
         for rep in range(REPS):
-            drop_intra_query_caches()
+            # Drop every registered DataFrame memo: each repetition
+            # computes from parquet and inherits no other's warm cache.
+            engine.clear_caches()
             spark.sparkContext.setJobDescription(f"bench:{name} rep{rep}")
             t0 = time.perf_counter()
             try:

@@ -9,13 +9,16 @@ similarity search, multimodal columns, text analysis) -- as idiomatic
 Spark DataFrame / SQL / Structured Streaming, designed for 100 TB scale.
 
 Layout:
-    session     -- SparkSession factory / runtime config (UTC, AQE, Arrow)
+    session     -- the local session builder and the runtime confs (UTC, AQE, Arrow)
     schemas     -- explicit StructType schemas for the test tables
-    sources/    -- parquet/CSV/JSON/binary/streaming loaders
-    functions/  -- column-level building blocks (text cleaning, vectors, ...)
-    operators/  -- composite operators (tfidf, dedup, similarity, sessionize)
-    plans/      -- named query registry (spark fn + DuckDB oracle SQL)
-    streaming/  -- Structured Streaming pipelines (windows, dedup, ingest)
+    io          -- ``load_table``, the loader every query imports
+    sources/    -- the declared-schema table loader and its footer check
+    functions/  -- column-level building blocks (text cleaning, lemmatizer)
+    operators/  -- composite operators (as-of join, multimodal, sketches)
+    queries/    -- every query with its DuckDB oracle SQL, one module per
+                   area (core, relational, text, tfidf, dedup, similarity,
+                   ...); ``queries.REGISTRY`` is the registry
+    streaming/  -- Structured Streaming queries (windows, dedup, ingest)
 """
 
 __version__ = "0.1.0"

@@ -1,7 +1,8 @@
 """Query registry: every module contributes `QUERIES` (name -> callable
 taking (spark, sf_dir) -> DataFrame) and `ORACLES` (name -> DuckDB SQL).
 
-The driver contract (`__spark_entry__.py`) merges these into its
+This is the one registration path: the driver contract
+(`__spark_entry__.py`) returns copies of `REGISTRY` and `ORACLES` as its
 `queries()` / `oracle_sql()` maps. A query with no oracle entry gets the
 driver's weaker rows-only check — reserved for genuinely
 non-SQL-expressible operators (probabilistic sketches, streaming state).
@@ -9,10 +10,10 @@ non-SQL-expressible operators (probabilistic sketches, streaming state).
 
 from __future__ import annotations
 
-from . import dedup, ingest, relational, scalars, similarity, sinks, temporal, text, tfidf, udfs, windows
+from . import core, dedup, ingest, relational, scalars, similarity, sinks, temporal, text, tfidf, udfs, windows
 from ..streaming import jobs as streaming_jobs
 
-_MODULES = [dedup, ingest, relational, scalars, similarity, sinks, temporal, text, tfidf, udfs, windows, streaming_jobs]
+_MODULES = [core, dedup, ingest, relational, scalars, similarity, sinks, temporal, text, tfidf, udfs, windows, streaming_jobs]
 
 REGISTRY = {}
 ORACLES = {}

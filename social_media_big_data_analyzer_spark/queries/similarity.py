@@ -72,6 +72,19 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _nonzero_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embeddings with their norm ``nrm``, zero vectors dropped.
+
+    Cosine is undefined for a zero vector: the division would raise
+    DIVIDE_BY_ZERO under ANSI, and DuckDB would return NULL. Both engines
+    drop such vectors, as probes and as candidates. ``nrm > 0`` iff some
+    component is nonzero (a sum of squares cannot cancel), so the oracle's
+    ``sum of squares > 0`` keeps exactly the same rows.
+    """
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.withColumn("nrm", _norm(F.col("embedding"))).filter(F.col("nrm") > 0)
+
+
 def _topk_per_probe(scored: DataFrame) -> DataFrame:
     """Exact per-probe top-k with a partial top-k first (guide §2.3
     "aggregate before you shuffle", applied to a window):
@@ -108,9 +121,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise be re-folded once per PAIR — 2x|probes| redundant passes
     # per vector). dot/(na*nb) multiplies the same doubles in the same
     # order, so results are bit-identical to the inline form.
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _nonzero_embeddings(spark, sf_dir)
     probes = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("probe_vec"),
@@ -130,9 +141,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate top-k with multi-probe candidate
     generation. Rows-only (bucketing is engine-specific float math)."""
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _nonzero_embeddings(spark, sf_dir)
     bucket_expr = None
     for p in range(N_PLANES):
         plane = F.array(*[F.lit(v) for v in PLANES[p]])
@@ -204,14 +213,18 @@ def _sql_cos(a: str, b: str) -> str:
 
 ORACLES = {
     "cosine_topk": f"""
-        WITH probes AS (
+        WITH nonzero AS (
+            SELECT * FROM embeddings
+            WHERE {_FOLD_DOT.format(dim=_DIM, a='embedding', b='embedding')} > 0
+        ),
+        probes AS (
             SELECT vec_id AS probe_id, embedding AS probe_vec
-            FROM embeddings WHERE vec_id % 100 = 0
+            FROM nonzero WHERE vec_id % 100 = 0
         ),
         scored AS (
             SELECT probe_id, vec_id,
                    {_sql_cos('probe_vec', 'embedding')} AS cos
-            FROM embeddings CROSS JOIN probes
+            FROM nonzero CROSS JOIN probes
         )
         SELECT probe_id, vec_id, round(cos, 6) AS cos, rank
         FROM (

@@ -1,4 +1,4 @@
-"""Runtime configuration of the engine's SparkSession.
+"""The engine's SparkSession: its runtime confs and the local builder.
 
 Reference analog: process boot at /root/reference/app.py:13-34 (cached
 NLTK init, page config, session-state init). Here the long-lived
@@ -15,8 +15,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
 #: SQL confs that are settable at runtime on ANY session (including one
@@ -31,12 +29,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # parallelismFirst=true (the default) pins reduce-side task count to
     # the default parallelism even for KB-sized shuffles -- pure scheduler
     # overhead locally and quadratic shuffle-block growth at cluster scale.
-    # The advisory size is env-tunable; 64 MB is the local default, raise
-    # toward 256 MB on big clusters (guide §9).
+    # 64 MB suits the local fixtures; big clusters raise it toward 256 MB
+    # (guide §9).
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SMBDA_ADVISORY_PARTITION_BYTES", "64m"
-    ),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Small dims (region/nation/supplier/part at test SFs) must broadcast.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -52,3 +48,23 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build, or restricted -- keep going
     return spark
+
+
+def local_session(cores: int | str, driver_memory: str | None = None) -> SparkSession:
+    """The one ``local[cores]`` session of bench.py, the tests and tools/.
+
+    Shuffle partitions follow ``cores``; the UI and the console progress bar
+    are off (progress bars corrupt captured stdout); the log level is ERROR;
+    then :func:`configure` applies ``RUNTIME_CONFS``.
+    """
+    b = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+    )
+    if driver_memory:
+        b = b.config("spark.driver.memory", driver_memory)
+    spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return configure(spark)

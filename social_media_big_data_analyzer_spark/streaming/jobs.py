@@ -38,14 +38,15 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Watermarks require TIMESTAMP (not NTZ); the session timezone is
     # pinned to UTC so the cast below preserves wall-clock values exactly.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # The file source wants a directory; the fixture is a single file, so
-    # stream the directory with a glob filter.
-    stream = (
-        spark.readStream.schema(schemas.EVENTS)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    check_columns("events", os.path.join(sf_dir, "events.parquet"))
+    path = os.path.join(sf_dir, "events.parquet")
+    reader = spark.readStream.schema(schemas.EVENTS)
+    if os.path.isdir(path):  # Spark-written table: stream its part files
+        stream = reader.parquet(path)
+    else:
+        # The file source wants a directory, so a single file is streamed
+        # from its parent through a glob filter.
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    check_columns("events", path)
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -57,7 +58,10 @@ STATE_PARTITIONS = 8
 
 
 def _run_to_memory(result: DataFrame, mode: str) -> DataFrame:
-    """Execute with availableNow into a uniquely-named memory sink."""
+    """Execute with availableNow into a uniquely-named memory sink and return
+    its rows. The sink's temp view is dropped, also when the run fails; the
+    returned DataFrame keeps the sink's data alive only while it is
+    referenced."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -71,9 +75,10 @@ def _run_to_memory(result: DataFrame, mode: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+        return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)  # also after a failed run
 
 
 def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,47 +1,26 @@
-import importlib.util
 import os
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from social_media_big_data_analyzer_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    yield local_session(4)
 
 
 @pytest.fixture(scope="session")
 def entry_mod():
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    import __spark_entry__
+
+    return __spark_entry__
 
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.oracle_check import duck_views
 
-    from social_media_big_data_analyzer_spark.schemas import SCHEMAS
-
-    con = duckdb.connect()
-    for t in SCHEMAS:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
+    return duck_views(SF_DIR)

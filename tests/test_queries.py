@@ -2,55 +2,24 @@
 twin on DuckDB at sf0.001 — same comparison the round driver performs
 (row count, sorted column names, order-insensitive normalized values)."""
 
-import math
+import os
 
 import pytest
+
+from social_media_big_data_analyzer_spark.queries import REGISTRY
+from tools.oracle_check import duck_views, oracle_mismatch, spark_rows
 
 from .conftest import SF_DIR
 
 
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NULL"
-        return f"{v:.6f}"
-    if isinstance(v, list):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
-def _query_names():
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return sorted(mod.queries())
-
-
-@pytest.mark.parametrize("name", _query_names())
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(name, spark, entry_mod, duck):
-    fn = entry_mod.queries()[name]
-    sdf = fn(spark, SF_DIR)
-    cols = sorted(sdf.columns)
-    srows = sorted(tuple(_norm(r[c]) for c in cols) for r in sdf.collect())
-
+    cols, srows = spark_rows(entry_mod.queries()[name](spark, SF_DIR))
     oracle = entry_mod.oracle_sql().get(name)
     if oracle is None:
         pytest.skip(f"{name}: rows-only (no SQL oracle)")
-    cur = duck.execute(oracle)
-    ocols = [d[0] for d in cur.description]
-    assert sorted(ocols) == cols, f"columns differ: spark={cols} oracle={sorted(ocols)}"
-    idx = [ocols.index(c) for c in cols]
-    orows = sorted(tuple(_norm(row[i]) for i in idx) for row in cur.fetchall())
-    assert len(srows) == len(orows), f"rows: spark={len(srows)} oracle={len(orows)}"
-    assert srows == orows
+    why = oracle_mismatch(cols, srows, duck, oracle)
+    assert why is None, why
 
 
 def test_entry_returns_rows(spark, entry_mod):
@@ -110,3 +79,30 @@ def test_running_revenue_decimal_oracle_matches_legacy_double(duck):
         """
     ).fetchall()
     assert decimal_rows == double_rows
+
+
+def test_zero_vectors_are_excluded(spark, entry_mod, tmp_path):
+    """A zero-norm embedding has no cosine. Both engines drop it, as probe
+    and as candidate, instead of raising DIVIDE_BY_ZERO (Spark under ANSI)
+    or scoring NULL (DuckDB)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+    zeroed = {100, 7}  # one probe (vec_id % 100 == 0) and one non-probe
+    field = t.schema.field("embedding")
+    vecs = [
+        [0.0] * len(v) if i in zeroed else v
+        for i, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    ]
+    t = t.set_column(t.schema.get_field_index("embedding"), field, pa.array(vecs, field.type))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+
+    cols, srows = spark_rows(qs["cosine_topk"](spark, str(tmp_path)))
+    why = oracle_mismatch(cols, srows, duck_views(str(tmp_path)), oracles["cosine_topk"])
+    assert why is None, why
+
+    ann = qs["ann_lsh_topk"](spark, str(tmp_path)).collect()
+    assert ann
+    assert not zeroed & ({r.probe_id for r in ann} | {r.vec_id for r in ann})

@@ -10,7 +10,6 @@ SF as the r21 plan dumps) so before/after files stay comparable.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
@@ -21,25 +20,11 @@ def main() -> int:
     names = sys.argv[3:]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    sys.path.insert(0, repo)
+    import __spark_entry__ as mod
+    from social_media_big_data_analyzer_spark.session import local_session
 
-    from pyspark.sql import SparkSession
-
-    from social_media_big_data_analyzer_spark import session as engine_session
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    engine_session.configure(spark)
+    spark = local_session(8)
 
     qmap = mod.queries()
     if not names:

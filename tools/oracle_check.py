@@ -4,11 +4,14 @@ column names, and order-insensitive value multiset.
 
 Usage: python tools/oracle_check.py [sf_dir] [--only name1,name2]
 (default sf_dir /root/testdata/sf0.01). Exit 0 iff every query matches.
+
+tests/ import the comparison (`duck_views`, `spark_rows`, `oracle_mismatch`)
+from here, and perfbench loads `_norm` by path, so importing this module
+must have no side effects.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import math
 import os
 import sys
@@ -28,6 +31,44 @@ def _norm(v):
     return str(v)
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per declared table present in ``sf_dir``."""
+    from social_media_big_data_analyzer_spark.schemas import SCHEMAS
+
+    con = duckdb.connect()
+    for t in SCHEMAS:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def spark_rows(sdf) -> tuple[list[str], list[tuple]]:
+    """Sorted column names and the sorted, normalized rows of ``sdf``."""
+    cols = sorted(sdf.columns)
+    return cols, sorted(tuple(_norm(r[c]) for c in cols) for r in sdf.collect())
+
+
+def oracle_mismatch(cols: list[str], srows: list[tuple], con, sql: str) -> str | None:
+    """None when the oracle ``sql`` gives the same columns and row multiset as
+    the Spark result from :func:`spark_rows`, else the first difference."""
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    if sorted(ocols) != cols:
+        return f"columns spark={cols} oracle={sorted(ocols)}"
+    idx = [ocols.index(c) for c in cols]
+    orows = sorted(tuple(_norm(row[i]) for i in idx) for row in cur.fetchall())
+    if len(srows) != len(orows):
+        return f"rows spark={len(srows)} oracle={len(orows)}"
+    if srows != orows:
+        bad = next(i for i, (a, b) in enumerate(zip(srows, orows)) if a != b)
+        return (
+            f"value mismatch at sorted-row {bad}:\n"
+            f"  spark : {srows[bad]}\n  oracle: {orows[bad]}"
+        )
+    return None
+
+
 def main() -> int:
     args = sys.argv[1:]
     only: set[str] | None = None
@@ -36,32 +77,12 @@ def main() -> int:
         only = set(args[i + 1].split(","))
         del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as mod
+    from social_media_big_data_analyzer_spark.session import local_session
 
-    from pyspark.sql import SparkSession
-
-    from social_media_big_data_analyzer_spark.schemas import SCHEMAS
-
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in SCHEMAS:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    spark = local_session(os.environ.get("SPARK_GRAFT_CPUS", "8"), driver_memory="8g")
+    con = duck_views(sf_dir)
 
     qs, oracles = mod.queries(), mod.oracle_sql()
     if only is not None:
@@ -77,9 +98,7 @@ def main() -> int:
     failed = []
     for name, fn in qs.items():
         try:
-            sdf = fn(spark, sf_dir)
-            cols = sorted(sdf.columns)
-            srows = sorted(tuple(_norm(r[c]) for c in cols) for r in sdf.collect())
+            cols, srows = spark_rows(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failed.append(name)
@@ -88,27 +107,13 @@ def main() -> int:
             print(f"ROWS-ONLY {name}: {len(srows)} rows (no oracle)")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            raw = cur.fetchall()
+            why = oracle_mismatch(cols, srows, con, oracles[name])
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error {e}")
             failed.append(name)
             continue
-        if sorted(ocols) != cols:
-            print(f"FAIL {name}: columns spark={cols} oracle={sorted(ocols)}")
-            failed.append(name)
-            continue
-        idx = [ocols.index(c) for c in cols]
-        orows = sorted(tuple(_norm(row[i]) for i in idx) for row in raw)
-        if len(srows) != len(orows):
-            print(f"FAIL {name}: rows spark={len(srows)} oracle={len(orows)}")
-            failed.append(name)
-        elif srows != orows:
-            bad = next(i for i, (a, b) in enumerate(zip(srows, orows)) if a != b)
-            print(f"FAIL {name}: value mismatch at sorted-row {bad}:")
-            print(f"  spark : {srows[bad]}")
-            print(f"  oracle: {orows[bad]}")
+        if why:
+            print(f"FAIL {name}: {why}")
             failed.append(name)
         else:
             print(f"OK   {name}: {len(srows)} rows")
